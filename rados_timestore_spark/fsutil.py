@@ -633,6 +633,223 @@ def cas_commit_meta(fs: HadoopFS, meta_path: str, lock: str,
         fs.write_text_atomic(meta_path, json.dumps(doc))
 
 
+# ------------------------------------------------ directory swaps
+#
+# The persisted ANN indexes replace data directories by one protocol:
+# stage (write the new dir complete beside the live one) -> move aside
+# (rename live -> live.old) -> promote (rename staging -> live) -> drop
+# (delete live.old).  A kill between move-aside and promote leaves only
+# live.old, and recovery renames it back; a kill after the promote
+# leaves a stale live.old, and recovery drops it.
+#
+# Swaps that must land together (a retrain or reshard replaces several
+# dirs) commit through a marker file holding the target meta.  The
+# marker is the commit point: before it, the stagings are orphans swept
+# at the next verb entry; after it, every verb and probe entry rolls
+# the swaps forward until the target meta lands.  The txn fence is
+# written into meta before the marker, so a kill between the two
+# aborts.  Probe entries never sweep stagings: a live maintainer builds
+# them before its marker exists.  The swap order is per surface — it is
+# what lets a probe prove its file listings predate the swaps.
+
+
+def swap_dir(fs: HadoopFS, live: str, staging: str,
+             missing_drops: bool = False) -> None:
+    """Replace ``live`` by the complete ``staging`` dir (move aside,
+    promote, drop).  A missing ``live`` is created.  A missing
+    ``staging`` fails the promote, or with ``missing_drops`` means the
+    new contents are empty and ``live`` goes away.  A failed promote
+    puts the moved-aside dir back before raising ``IOError``."""
+    old = f"{live}.old"
+    moved = fs.exists(live)
+    if moved and not fs.rename(live, old):
+        raise IOError(f"cannot move {live} aside")
+    if not missing_drops or fs.exists(staging):
+        if not fs.rename(staging, live):
+            if moved:
+                fs.rename(old, live)
+            raise IOError(f"cannot promote {staging} to {live}")
+    fs.delete(old, recursive=True)
+
+
+def swap_partitions(fs: HadoopFS, live: str, staging: str, parts,
+                    prefix: str, missing_drops: bool = False) -> None:
+    """:func:`swap_dir` for each ``<prefix><part>`` dir of ``live``;
+    other partitions are never moved.  The swaps are independent
+    metadata ops, so more than 4 run from a small thread pool (serially
+    their round trips dominated a k=256 IVF delete).  An error leaves
+    some partitions swapped and some not — the state a mid-loop kill
+    leaves, which recovery and the verbs' replays converge."""
+    def swap(p) -> None:
+        swap_dir(fs, f"{live}/{prefix}{p}", f"{staging}/{prefix}{p}",
+                 missing_drops)
+
+    parts = list(parts)
+    if len(parts) > 4:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(16, len(parts))) as pool:
+            for _ in pool.map(swap, parts):
+                pass
+    else:
+        for p in parts:
+            swap(p)
+
+
+def _settle_old(fs: HadoopFS, live: str) -> None:
+    """Recover a ``live.old`` remnant: beside ``live`` it is the tail
+    of a finished swap (dropped), alone it is the only copy of an
+    unfinished one (renamed back)."""
+    if fs.exists(live):
+        fs.delete(f"{live}.old", recursive=True)
+    else:
+        fs.rename(f"{live}.old", live)
+
+
+class SwappedIndex:
+    """Meta document, CAS commits and swap recovery shared by the
+    persisted ANN indexes.  Subclasses set ``root`` and ``fs`` and
+    declare their layout: ``META`` (meta file name), ``NOT_BUILT``
+    (raised by :meth:`meta`), ``LABEL`` (for errors), the roll-forward
+    ``ROLL_MARKER`` file with its ``ROLL_STAGING`` / ``ROLL_PRE`` dir
+    suffixes and the ``ROLL_DIRS`` it swaps in order, and the
+    ``OLD_DIRS`` / ``PARTITIONED_OLD_DIRS`` whose own or partition
+    dirs a single swap replaces.  Only those are checked for ``.old``
+    remnants: each check is an FS call on every probe entry."""
+
+    def _ns_dir(self, ns: str) -> str:
+        return f"{self.root}/{ns}"
+
+    def _meta_lock(self, ns: str) -> str:
+        return f"{self._ns_dir(ns)}/{self.META}.lock"
+
+    def meta(self, ns: str) -> dict:
+        import json
+
+        path = f"{self._ns_dir(ns)}/{self.META}"
+        if not self.fs.exists(path):
+            raise self.NOT_BUILT(
+                f"{self.LABEL} {ns!r} has no {self.META} under "
+                f"{self.root} — run build() first")
+        return json.loads(self.fs.read_text(path))
+
+    def _write_meta(self, ns: str, doc: dict) -> None:
+        import json
+
+        self.fs.write_text_atomic(
+            f"{self._ns_dir(ns)}/{self.META}", json.dumps(doc))
+
+    def _commit_meta(self, ns: str, doc: dict) -> None:
+        """CAS-fenced meta flip (:func:`cas_commit_meta`); ``doc``
+        carries the ``txn`` the verb read at entry, so the CAS window
+        spans the verb's whole run."""
+        cas_commit_meta(self.fs, f"{self._ns_dir(ns)}/{self.META}",
+                        self._meta_lock(ns),
+                        what=f"{self.LABEL} {ns!r}", doc=doc)
+
+    def _commit_roll(self, ns: str, target: dict) -> dict:
+        """Commit a marker-driven multi-dir swap whose ``ROLL_DIRS``
+        stagings are complete, run it forward and return the new meta.
+        ``target`` is the full meta to commit, carrying the entry txn.
+
+        Under the flip lock: CAS-check the stored txn, write the fence
+        (txn + 1) — so a maintainer already past its entry read fails
+        its commit instead of being clobbered by the swaps — then the
+        marker.  The roll-forward's meta write bumps the txn again."""
+        import json
+
+        entry_txn = int(target["txn"])
+        with flip_lock(self.fs, self._meta_lock(ns),
+                       what=f"{self.LABEL} {ns!r}"):
+            stored = self.meta(ns)
+            if int(stored.get("txn", 0)) != entry_txn:
+                raise ConcurrentMaintainerError(
+                    f"{self.LABEL} {ns!r}: meta txn advanced "
+                    f"{entry_txn} -> {stored.get('txn', 0)} since this "
+                    f"verb read it (concurrent maintainer detected); "
+                    f"re-run the verb")
+            stored["txn"] = entry_txn + 1
+            self._write_meta(ns, stored)
+            self.fs.write_text_atomic(
+                f"{self._ns_dir(ns)}/{self.ROLL_MARKER}",
+                json.dumps(target))
+        self._restore_remnants(ns)
+        return self.meta(ns)
+
+    def _restore_remnants(self, ns: str,
+                          sweep_stagings: bool = False) -> None:
+        """Crash recovery, run first at every verb and probe entry:
+
+        * a committed marker rolls forward under the meta flip lock —
+          the verb's own completion and a concurrent probe entry may
+          both see it, and unserialized they would race the
+          non-clobber renames;
+        * ``sweep_stagings`` (verb entries only; verbs are serial by
+          contract): with no marker, ``ROLL_STAGING`` dirs are orphans
+          of a swap killed before its commit point, and
+          ``.clockprobe.`` files are :func:`fs_now_ms` probes killed
+          between create and delete — both are deleted;
+        * every single-swap ``.old`` remnant is settled."""
+        ns_dir = self._ns_dir(ns)
+        if not self.fs.exists(ns_dir):
+            return  # never built: the caller's meta() raises NOT_BUILT
+        marker = f"{ns_dir}/{self.ROLL_MARKER}"
+        if self.fs.exists(marker):
+            with flip_lock(self.fs, self._meta_lock(ns),
+                           what=f"{self.LABEL} {ns!r}"):
+                self._roll_forward(ns, marker)
+        if sweep_stagings and not self.fs.exists(marker):
+            for d in self.ROLL_DIRS:
+                staging = f"{ns_dir}/{d}{self.ROLL_STAGING}"
+                if self.fs.exists(staging):
+                    self.fs.delete(staging, recursive=True)
+            for st in self.fs.fs.listStatus(self.fs._path(ns_dir)):
+                name = st.getPath().getName()
+                if ".clockprobe." in name:
+                    self.fs.delete(f"{ns_dir}/{name}", recursive=False)
+        for d in self.OLD_DIRS:
+            if self.fs.exists(f"{ns_dir}/{d}.old"):
+                _settle_old(self.fs, f"{ns_dir}/{d}")
+        for d in self.PARTITIONED_OLD_DIRS:
+            for name in self.fs.list_dirs(f"{ns_dir}/{d}"):
+                if name.endswith(".old") and "=" in name:
+                    live = f"{ns_dir}/{d}/{name[:-len('.old')]}"
+                    _settle_old(self.fs, live)
+
+    def _roll_forward(self, ns: str, marker: str) -> None:
+        """Complete a committed marker's swaps and meta; the caller
+        holds the meta flip lock.  Each ``ROLL_DIRS`` entry moves aside
+        to ``ROLL_PRE``, kept until its staging is promoted, so a kill
+        anywhere re-enters at the same step."""
+        import json
+
+        if not self.fs.exists(marker):
+            return  # the lock's previous holder completed it
+        target = json.loads(self.fs.read_text(marker))
+        for d in self.ROLL_DIRS:
+            base = f"{self._ns_dir(ns)}/{d}"
+            staging, pre = base + self.ROLL_STAGING, base + self.ROLL_PRE
+            if self.fs.exists(staging):
+                if self.fs.exists(base) and not self.fs.exists(pre):
+                    if not self.fs.rename(base, pre):
+                        raise IOError(f"roll-forward: cannot move {base} "
+                                      f"aside")
+                if not self.fs.exists(base):
+                    if not self.fs.rename(staging, base):
+                        raise IOError(f"roll-forward: cannot promote "
+                                      f"{staging}")
+            if self.fs.exists(pre):
+                self.fs.delete(pre, recursive=True)
+        stored = self.meta(ns)
+        if int(stored.get("version", 0)) < int(target["version"]):
+            # direct fenced write: the flip lock is already held (the
+            # CAS wrapper would self-deadlock), and the marker IS the
+            # commit — this is its tail, not a new commit point
+            target["txn"] = int(stored.get("txn", 0)) + 1
+            self._write_meta(ns, target)
+        self.fs.delete(marker, recursive=False)
+
+
 def maintain_plan(n: int, parts: int, bound: int, skewed: bool,
                   refit_same_layout: bool) -> int | None:
     """Pure growth-decision rule shared by both persisted ANN

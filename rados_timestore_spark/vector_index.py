@@ -65,10 +65,9 @@ from pyspark.sql import functions as F
 
 from rados_timestore_spark.core import one_slice_df
 from rados_timestore_spark.fsutil import (
-    ConcurrentMaintainerError, HadoopFS, flip_lock,
+    HadoopFS, SwappedIndex, swap_dir, swap_partitions,
 )
 
-_META = "_vidx_meta.json"
 _PQ_MARKER = "_pq_meta.json"
 #: Build-generation marker inside the centroids dir (r13): a REBUILD
 #: overwrites centroids, then assignments, then commits meta — a
@@ -82,13 +81,6 @@ _PQ_MARKER = "_pq_meta.json"
 #: index, accepted (one unavoidable silent window exists on the FIRST
 #: marker-aware rebuild of a legacy index, crash-before-marker).
 _CENT_MARKER = "_cent_meta.json"
-#: Roll-forward marker for :meth:`VectorIndex.retrain` (r14, VERDICT
-#: r13 #2 — the HNSW ``_RESHARD_MARKER`` pattern mirrored): written
-#: under the meta flip lock AFTER all three staging dirs are complete,
-#: carrying the full target meta.  From that commit point the retrain
-#: completes deterministically at every verb/probe entry
-#: (``_roll_retrain_forward``), across any kill.
-_RETRAIN_MARKER = "_retrain.json"
 
 
 def _bucket_shaped(df: DataFrame) -> DataFrame:
@@ -379,8 +371,27 @@ class RetrainRaceError(IOError):
     is flipping the index faster than probes can snapshot it."""
 
 
-class VectorIndex:
+class VectorIndex(SwappedIndex):
     """Build-once / probe-many IVF index persisted under ``root``."""
+
+    META = "_vidx_meta.json"
+    NOT_BUILT = VectorIndexNotBuilt
+    LABEL = "vector index"
+    #: Roll-forward marker of :meth:`retrain`: written under the meta
+    #: flip lock after all three staging dirs are complete, carrying
+    #: the full target meta.  From that commit point the retrain
+    #: completes at every verb/probe entry, across any kill.
+    ROLL_MARKER = "_retrain.json"
+    ROLL_STAGING = ".retraining"
+    ROLL_PRE = ".preretrain"
+    #: Centroids swap FIRST: their staged ``_CENT_MARKER`` binds the
+    #: new routing to the target version, so a probe that re-reads
+    #: the live centroid marker after listing its bucket files can
+    #: prove its snapshot predates the retrain (see _pruned_scan).
+    ROLL_DIRS = ("centroids", "pq_codebooks", "assignments")
+    #: delete swaps buckets; compact, enable_pq swap whole dirs
+    OLD_DIRS = ("assignments", "pq_codebooks")
+    PARTITIONED_OLD_DIRS = ("assignments",)
 
     #: Per-bucket sizing rule (the HNSW :data:`~rados_timestore_spark.
     #: hnsw.HNSWIndex.SHARD_BOUND` analog): probe cost is
@@ -404,9 +415,6 @@ class VectorIndex:
 
     # ------------------------------------------------------- layout
 
-    def _ns_dir(self, ns: str) -> str:
-        return f"{self.root}/{ns}"
-
     def _centroids_dir(self, ns: str) -> str:
         return f"{self._ns_dir(ns)}/centroids"
 
@@ -415,107 +423,6 @@ class VectorIndex:
 
     def _pq_dir(self, ns: str) -> str:
         return f"{self._ns_dir(ns)}/pq_codebooks"
-
-    def _restore_remnants(self, ns: str,
-                          sweep_stagings: bool = False) -> None:
-        """Crash recovery for the swap windows (the r11 HNSW fix,
-        cross-applied): the per-bucket swap (delete) and the whole-dir
-        swaps (compact, enable_pq) are rename(live -> .old) then
-        rename(staging -> live) then delete(.old).  A crash BETWEEN
-        the renames leaves no live dir — the uncommitted op rolls back
-        by restoring the .old remnant (pre-fix, delete()'s replay saw
-        the vanished bucket as unaffected and the victims' bucket was
-        lost; compact's re-entry even deleted the .old holding the
-        only copy).  A crash AFTER the second rename leaves a stale
-        .old beside the committed new dir — deleted.  Every verb and
-        probe entry calls this first.
-
-        ALSO rolls :meth:`retrain` FORWARD (r14, the HNSW reshard
-        pattern mirrored): the retrain marker persists the full
-        target meta before the first of retrain's whole-dir swaps
-        (centroids, then pq codebooks, then assignments), so a kill
-        anywhere between them completes deterministically here —
-        under the meta flip lock, so exactly one runner executes the
-        swaps.
-
-        ``sweep_stagings`` (VERB entries only): without a marker,
-        leftover ``.retraining`` staging dirs belong to a retrain
-        that died before its commit point and are swept.  PROBE
-        entries must NOT sweep (the HNSW r13 review finding): a LIVE
-        retrain spends its whole staging-build window before the
-        marker exists, and probes legitimately run concurrently with
-        the single maintainer."""
-        if not self.fs.exists(self._ns_dir(ns)):
-            return  # never built: let the caller's meta() raise
-        marker_path = f"{self._ns_dir(ns)}/{_RETRAIN_MARKER}"
-        if self.fs.exists(marker_path):
-            with flip_lock(self.fs, f"{self._ns_dir(ns)}/{_META}.lock",
-                           what=f"vector index {ns!r}"):
-                self._roll_retrain_forward(ns, marker_path)
-        live = self._assignments_dir(ns)
-        if sweep_stagings and not self.fs.exists(marker_path):
-            for base in (self._centroids_dir(ns), self._pq_dir(ns),
-                         live):
-                staging = f"{base}.retraining"
-                if self.fs.exists(staging):
-                    # a retrain that died before its marker: nothing
-                    # was swapped, the staging is an orphan
-                    self.fs.delete(staging, recursive=True)
-        for whole in (live, self._pq_dir(ns)):
-            old = f"{whole}.old"
-            if self.fs.exists(old):
-                if self.fs.exists(whole):
-                    self.fs.delete(old, recursive=True)
-                else:
-                    self.fs.rename(old, whole)
-        for name in self.fs.list_dirs(live):
-            if not name.endswith(".old") or "=" not in name:
-                continue
-            bucket_live = f"{live}/{name[:-len('.old')]}"
-            if self.fs.exists(bucket_live):
-                self.fs.delete(f"{live}/{name}", recursive=True)
-            else:
-                self.fs.rename(f"{live}/{name}", bucket_live)
-
-    def _roll_retrain_forward(self, ns: str, marker_path: str) -> None:
-        """Complete a committed retrain's swaps + meta, CALLED WITH
-        THE META FLIP LOCK HELD (see _restore_remnants) — only one
-        runner executes this at a time; a contender that waited out
-        the lock re-checks the marker and finds it gone.
-
-        Swap order is the probe-consistency proof (the HNSW
-        _probe_snapshot argument, mirrored): the CENTROIDS dir — whose
-        staged ``_CENT_MARKER`` binds the new routing to the target
-        version — flips FIRST, so any probe that re-reads the live
-        centroid marker after listing its bucket files can prove its
-        snapshot predates the retrain entirely."""
-        if not self.fs.exists(marker_path):
-            return  # the lock's previous holder completed it
-        target = json.loads(self.fs.read_text(marker_path))
-        for base in (self._centroids_dir(ns), self._pq_dir(ns),
-                     self._assignments_dir(ns)):
-            staging, pre = f"{base}.retraining", f"{base}.preretrain"
-            if self.fs.exists(staging):
-                if self.fs.exists(base) and not self.fs.exists(pre):
-                    if not self.fs.rename(base, pre):
-                        raise IOError(
-                            f"retrain({ns!r}) roll-forward: cannot "
-                            f"move {base} aside")
-                if not self.fs.exists(base):
-                    if not self.fs.rename(staging, base):
-                        raise IOError(
-                            f"retrain({ns!r}) roll-forward: cannot "
-                            f"promote {staging}")
-            if self.fs.exists(pre):
-                self.fs.delete(pre, recursive=True)
-        stored = self.meta(ns)
-        if int(stored.get("version", 0)) < int(target["version"]):
-            # direct fenced write: the flip lock is already held (the
-            # CAS wrapper would self-deadlock), and the marker IS the
-            # commit — this is its tail, not a new commit point
-            target["txn"] = int(stored.get("txn", 0)) + 1
-            self._write_meta(ns, target)
-        self.fs.delete(marker_path, recursive=False)
 
     def _heal_after_noop_delete(self, ns: str) -> None:
         """A delete that finds no victims may be the REPLAY of one
@@ -533,31 +440,20 @@ class VectorIndex:
         if self.fs.exists(staging):
             self.fs.delete(staging, recursive=True)
 
-    def _has_buckets(self, ns: str) -> bool:
-        """True when the assignments dir holds at least one bucket
-        partition with a data file — every read of the live table
-        treats bucket-less (delete-everything) or data-less (swept
-        crashed attempt) dirs as the empty index, the same
-        empty-is-absent convention the store uses for drained
-        generations (raw reads of either shape throw
-        UNABLE_TO_INFER_SCHEMA; review finding, r11)."""
-        return self.fs.dir_has_partition_data(
-            self._assignments_dir(ns), "bucket=")
-
     def _recount(self, ns: str) -> int:
         """Row count of the live assignments table — the source of
         truth for ``n_vectors`` at every verb's commit point.  A
         zero-filter zero-column count: Spark serves it from parquet
         footer row counts, so cost is bounded by file count, not
         corpus bytes."""
-        if not self._has_buckets(ns):
+        if not self.fs.dir_has_partition_data(
+                self._assignments_dir(ns), "bucket="):
             return 0
         return int(self.spark.read.parquet(
             self._assignments_dir(ns)).count())
 
     def _warn_if_overgrown(self, ns: str, doc: dict) -> None:
-        """Mean-density tripwire for the append verbs (VERDICT r13
-        "What's missing" #2, cross-applied from HNSW) — see
+        """Mean-density tripwire for the append verbs — see
         :data:`BUCKET_BOUND` for why the hot path checks the mean."""
         import warnings
 
@@ -576,9 +472,8 @@ class VectorIndex:
 
     def stats(self, ns: str) -> dict:
         """Exact per-bucket row counts against the sizing rule — the
-        observability verb that makes the retrain story operational
-        (VERDICT r13 "What's missing" #2; :meth:`HNSWIndex.stats`
-        mirrored).  One partition-column aggregation over the
+        observability verb that makes the retrain story operational.
+        One partition-column aggregation over the
         assignment table (parquet footer counts per bucket directory —
         cost bounded by file count, not corpus bytes).  ``over_bound``
         lists buckets whose EXACT count exceeds :data:`BUCKET_BOUND` —
@@ -587,7 +482,8 @@ class VectorIndex:
         self._restore_remnants(ns)
         doc = self.meta(ns)
         per: dict[int, int] = {}
-        if self._has_buckets(ns):
+        if self.fs.dir_has_partition_data(
+                self._assignments_dir(ns), "bucket="):
             rows = (self.spark.read.parquet(self._assignments_dir(ns))
                     .groupBy("bucket").count().collect())
             per = {int(r["bucket"]): int(r["count"]) for r in rows}
@@ -650,45 +546,6 @@ class VectorIndex:
         doc = self.retrain(ns, k=k_new, trainer="kmeans")
         return {"action": "retrain", "k": int(doc["k"]),
                 "k_requested": int(k_new), "stats": st, "meta": doc}
-
-    def meta(self, ns: str) -> dict:
-        path = f"{self._ns_dir(ns)}/{_META}"
-        if not self.fs.exists(path):
-            raise VectorIndexNotBuilt(
-                f"vector index {ns!r} has no {_META} under {self.root} "
-                f"— run build() first"
-            )
-        return json.loads(self.fs.read_text(path))
-
-    def _write_meta(self, ns: str, doc: dict) -> None:
-        self.fs.write_text_atomic(
-            f"{self._ns_dir(ns)}/{_META}", json.dumps(doc)
-        )
-
-    def _commit_meta(self, ns: str, doc: dict) -> None:
-        """CAS-fenced meta flip (VERDICT r12 #4, the store's
-        ``_write_meta_cas`` cross-applied): maintenance verbs on one
-        index are serial BY CONTRACT, and until r13 that contract was
-        enforced only by documentation — a second concurrent
-        maintainer silently lost the first's meta update (and worse,
-        interleaved its file swaps).  Every verb now carries the
-        ``txn`` counter it READ at entry into its commit; under the
-        flip lock the stored txn is re-checked and a mismatch raises
-        :class:`~rados_timestore_spark.fsutil.ConcurrentMaintainerError`
-        instead of clobbering.  Indexes persisted before r13 have no
-        ``txn`` field — both sides then default to 0 and the first
-        fenced commit starts the counter.
-
-        The lock serializes the re-check->write window itself (atomic
-        create-exclusive on HDFS/local, best-effort on object stores);
-        the txn CAS is the backstop for interleavings wider than the
-        window — a verb's Spark jobs run for seconds between its
-        entry read and this commit."""
-        from rados_timestore_spark.fsutil import cas_commit_meta
-
-        cas_commit_meta(self.fs, f"{self._ns_dir(ns)}/{_META}",
-                        f"{self._ns_dir(ns)}/{_META}.lock",
-                        what=f"vector index {ns!r}", doc=doc)
 
     # -------------------------------------------------------- build
 
@@ -764,11 +621,10 @@ class VectorIndex:
         # overwrite): the txn captured here makes the whole rebuild a
         # CAS window, so a maintainer interleaving anywhere inside it
         # fails the commit loudly (VERDICT r12 #4).  A REBUILD must
-        # first run crash recovery like every other verb (the HNSW
-        # r13 review finding, mirrored for retrain): a pending retrain
-        # marker left by a crash would otherwise roll forward AFTER
-        # this build commits — renaming the fresh build aside and
-        # promoting the pre-crash staging over it (silent loss).
+        # first run crash recovery like every other verb: a pending
+        # retrain marker left by a crash would otherwise roll forward
+        # AFTER this build commits — renaming the fresh build aside
+        # and promoting the pre-crash staging over it (silent loss).
         prev_version, prev_pq_gen, prev_txn = 0, 0, 0
         try:
             self.meta(ns)
@@ -1002,13 +858,13 @@ class VectorIndex:
             pq_cb=(self._load_pq(ns, doc)
                    if "pq" in doc else None),
             pq_residual=bool(doc.get("pq", {}).get("residual")))
-        # Cross-batch redelivery guard (the HNSW r11 ADVICE fix,
-        # cross-applied): a vec_id redelivered under a DIFFERENT
-        # batch id (at-least-once source) must not land twice.  With
-        # the centroids version fixed, a redelivered id assigns to
-        # the SAME bucket as before, so the existing-id anti-join
-        # prunes to just the batch's own buckets — a partition-pruned
-        # single-column scan, never a full-table pass.  The stage
+        # Cross-batch redelivery guard: a vec_id redelivered under a
+        # DIFFERENT batch id (at-least-once source) must not land
+        # twice.  With the centroids version fixed, a redelivered id
+        # assigns to the SAME bucket as before, so the existing-id
+        # anti-join prunes to just the batch's own buckets — a
+        # partition-pruned single-column scan, never a full-table
+        # pass.  The stage
         # write doubles as the materialization of the assignment pass
         # (DISK, not persist() — pin() is the repo's only sanctioned
         # cache route and its query-scoped lifecycle doesn't fit an
@@ -1039,17 +895,16 @@ class VectorIndex:
         # safe.  Whole-tree, not per-staged-bucket (ADVICE r11): if
         # the centroids were retrained between the crashed attempt
         # and this replay, the old attempt's files can sit in buckets
-        # OUTSIDE this replay's staged set — the HNSW path's
-        # sweep_files shape, cross-applied.  (A retrain via build()
+        # OUTSIDE this replay's staged set.  (A retrain via build()
         # also rewrites the assignments dir wholesale, but the sweep
         # must not depend on that implementation detail.)
-        if self._has_buckets(ns):
+        if self.fs.dir_has_partition_data(live, "bucket="):
             self.fs.sweep_files(live, prefix)
         # re-probe AFTER the sweep: it may have removed the live
         # dir's ONLY data files (a crashed attempt of this batch on
         # an otherwise-empty index) — nothing left to dedup against;
         # reading it would throw (review finding)
-        if bks and self._has_buckets(ns):
+        if bks and self.fs.dir_has_partition_data(live, "bucket="):
             existing = (
                 self.spark.read.parquet(live)
                 .filter(F.col("bucket").isin(bks))
@@ -1179,7 +1034,8 @@ class VectorIndex:
             raise ValueError(f"enable_pq({ns!r}): dim {dim} not "
                              f"divisible by m {m}")
         dsub = dim // m
-        if not self._has_buckets(ns):
+        live = self._assignments_dir(ns)
+        if not self.fs.dir_has_partition_data(live, "bucket="):
             # ValueError, NOT VectorIndexNotBuilt: the index IS built
             # (meta exists) — retry logic that maps NotBuilt to
             # "re-run build()" must not fire on a transient
@@ -1187,7 +1043,6 @@ class VectorIndex:
             raise ValueError(
                 f"enable_pq({ns!r}): index is empty (every vector "
                 f"deleted) — nothing to train codebooks on")
-        live = self._assignments_dir(ns)
         scan = self.spark.read.parquet(live)
         cb_rows = (scan.select("vec_id", "embedding", "bucket")
                    .orderBy("vec_id").limit(ksub).collect())
@@ -1248,21 +1103,8 @@ class VectorIndex:
         # promote: codebooks, then assignments, then the meta commit —
         # _load_pq's gen cross-check makes every window in between a
         # loud retry, never a silently-wrong serve
-        if self.fs.exists(cb_live):
-            if not self.fs.rename(cb_live, cb_old):
-                raise IOError(
-                    f"enable_pq({ns!r}): cannot move codebook dir")
-        if not self.fs.rename(cb_staging, cb_live):
-            if self.fs.exists(cb_old):
-                self.fs.rename(cb_old, cb_live)
-            raise IOError(f"enable_pq({ns!r}): codebook swap failed")
-        self.fs.delete(cb_old, recursive=True)
-        if not self.fs.rename(live, old):
-            raise IOError(f"enable_pq({ns!r}): cannot move live dir")
-        if not self.fs.rename(staging, live):
-            self.fs.rename(old, live)
-            raise IOError(f"enable_pq({ns!r}): staging swap failed")
-        self.fs.delete(old, recursive=True)
+        swap_dir(self.fs, cb_live, cb_staging)
+        swap_dir(self.fs, live, staging)
         doc = self.meta(ns)
         doc["txn"] = entry_txn  # CAS spans the whole verb (see build)
         doc["pq"] = {"m": int(m), "ksub": int(ksub),
@@ -1351,7 +1193,8 @@ class VectorIndex:
         dsub = int(doc["pq"]["dsub"])
         residual = bool(doc["pq"].get("residual"))
         CBm = self._load_pq(ns, doc)
-        if not self._has_buckets(ns):
+        if not self.fs.dir_has_partition_data(
+                self._assignments_dir(ns), "bucket="):
             # every bucket deleted: empty index, empty result (the
             # raw read would throw UNABLE_TO_INFER_SCHEMA).  The
             # schema must match the mode: the ADC-only path emits
@@ -1501,13 +1344,13 @@ class VectorIndex:
         entry_txn = int(self.meta(ns).get("txn", 0))  # also: raises
         # if never built; the txn read makes the whole verb one CAS
         # window (VERDICT r12 #4)
-        if not self._has_buckets(ns):
+        live = self._assignments_dir(ns)
+        if not self.fs.dir_has_partition_data(live, "bucket="):
             # every bucket already deleted: nothing to scan (the raw
             # read would throw), but this may be a crashed replay —
             # heal meta/remnants exactly like the no-victims path
             self._heal_after_noop_delete(ns)
             return 0
-        live = self._assignments_dir(ns)
         scan = self.spark.read.parquet(live)
         if isinstance(vec_ids, DataFrame):
             victims = vec_ids.select(
@@ -1544,38 +1387,12 @@ class VectorIndex:
             self.fs.delete(staging, recursive=True)
         (_bucket_shaped(survivors).write.mode("overwrite")
          .partitionBy("bucket").parquet(staging))
-        def swap(b) -> None:
-            old = f"{live}/bucket={b}.old"
-            if not self.fs.rename(f"{live}/bucket={b}", old):
-                raise IOError(f"delete({ns!r}): cannot move bucket {b}")
-            src = f"{staging}/bucket={b}"
-            if self.fs.exists(src):
-                if not self.fs.rename(src, f"{live}/bucket={b}"):
-                    self.fs.rename(old, f"{live}/bucket={b}")
-                    raise IOError(
-                        f"delete({ns!r}): swap failed for bucket {b}")
-            # else: the bucket held only victims — it simply vanishes
-            self.fs.delete(old, recursive=True)
-
-        # Per-bucket swaps are independent metadata ops (each bucket's
-        # own rename/rename/delete triple); issue them from a small
-        # thread pool like promote_dir_tree's renames — serially this
-        # loop was 3-4 py4j round trips x affected buckets (~3 s of a
-        # 9 s delete at k=256; at k=4096 it would dominate the verb).
-        # Failure semantics unchanged: an error propagates and leaves
-        # some buckets swapped and some not — exactly the partial
-        # state a mid-loop crash always left, recovered by replaying
-        # the delete (remaining victims found) and the recount below.
-        if len(affected) > 4:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                    max_workers=min(16, len(affected))) as pool:
-                for _ in pool.map(swap, affected):
-                    pass
-        else:
-            for b in affected:
-                swap(b)
+        # a bucket that held only victims has no staged dir: it
+        # vanishes.  A failure leaves some buckets swapped and some
+        # not — the state a mid-swap kill leaves, which the replayed
+        # delete (remaining victims found) and the recount converge.
+        swap_partitions(self.fs, live, staging, affected, "bucket=",
+                        missing_drops=True)
         self.fs.delete(staging, recursive=True)
         doc = self.meta(ns)
         # RECOUNT from the live table, never decrement (the HNSW r11
@@ -1617,9 +1434,9 @@ class VectorIndex:
         # changes no meta FIELD, but committing the txn bump at the
         # end makes an interleaved maintainer loud on one side or the
         # other instead of silently racing the directory swap
-        if not self._has_buckets(ns):
-            return 0   # empty index (delete-everything): nothing to pack
         live = self._assignments_dir(ns)
+        if not self.fs.dir_has_partition_data(live, "bucket="):
+            return 0   # empty index (delete-everything): nothing to pack
         staging, old = f"{live}.compacting", f"{live}.old"
         for leftover in (staging, old):
             if self.fs.exists(leftover):
@@ -1629,13 +1446,7 @@ class VectorIndex:
         # in exactly one task => exactly one file per bucket directory
         (_bucket_shaped(df).write.mode("overwrite")
          .partitionBy("bucket").parquet(staging))
-        if not self.fs.rename(live, old):
-            raise IOError(f"compact({ns!r}): cannot move live dir aside")
-        if not self.fs.rename(staging, live):
-            # roll back so the index stays readable
-            self.fs.rename(old, live)
-            raise IOError(f"compact({ns!r}): staging swap failed")
-        self.fs.delete(old, recursive=True)
+        swap_dir(self.fs, live, staging)
         self._commit_meta(ns, doc)
         return sum(
             1 for d in self.fs.list_dirs(live) if d.startswith("bucket=")
@@ -1649,9 +1460,9 @@ class VectorIndex:
     def retrain(self, ns: str, k: int | None = None,
                 trainer: str | None = None, iters: int = 2) -> dict:
         """Retrain the coarse quantizer at a new centroid count — the
-        bucket-growth escape hatch (VERDICT r13 #2, mirroring
-        :meth:`HNSWIndex.reshard` and the store's epoch rescale,
-        reference StoreHelpers.hs:194-221).  ``build(k=256)`` fixes
+        bucket-growth escape hatch (like :meth:`HNSWIndex.reshard`
+        and the store's epoch rescale, reference
+        StoreHelpers.hs:194-221).  ``build(k=256)`` fixes
         the bucket count forever, and probe cost is nprobe x bucket
         size: at 100x corpus every bucket is 100x fatter and probes
         degrade linearly with no escape.  ``retrain(ns, k=N)``
@@ -1672,14 +1483,11 @@ class VectorIndex:
         exactly-once streaming ingest keeps its replay fences across
         the retrain.
 
-        Crash safety (the reshard pattern): all three staging dirs
-        (centroids + pq codebooks + assignments, each ``.retraining``)
-        are written first; then, under the meta flip lock, the stored
-        txn is CAS-re-checked, bumped (the mid-flight-maintainer
-        fence — a verb past its entry read fails its commit loudly
-        instead of being clobbered by the swaps), and the roll-forward
-        marker (the commit point, carrying the full target meta) is
-        written.  The swaps + meta commit then run at
+        Crash safety: all three staging dirs (centroids + pq
+        codebooks + assignments, each ``.retraining``) are written
+        first; then :meth:`_commit_roll` fences the txn and writes the
+        roll-forward marker (the commit point, carrying the full
+        target meta).  The swaps + meta commit then run at
         :meth:`_restore_remnants` — here, or at the next verb/probe
         entry after a kill.  Centroids swap FIRST (their staged
         ``_CENT_MARKER`` binds the new routing to the target version),
@@ -1702,7 +1510,8 @@ class VectorIndex:
         trainer = trainer or doc.get("trainer", "sample")
         dim = int(doc["dim"])
         meta_cols = tuple(doc.get("meta_cols", ()))
-        if not self._has_buckets(ns):
+        if not self.fs.dir_has_partition_data(
+                self._assignments_dir(ns), "bucket="):
             raise ValueError(
                 f"retrain({ns!r}): the index holds no vectors — "
                 f"centroids cannot be trained from nothing; run "
@@ -1816,29 +1625,8 @@ class VectorIndex:
         if pq_doc is not None:
             target["pq"] = dict(pq_doc)
 
-        # COMMIT POINT: CAS-check + txn fence + marker, one lock hold
-        # (the reshard pattern, incl. the ADVICE r14 #1 fence: bump
-        # the stored txn so a mid-flight maintainer's commit fails
-        # loudly instead of being clobbered by the swaps; fence BEFORE
-        # marker so a kill between the two aborts cleanly)
-        with flip_lock(self.fs, f"{self._ns_dir(ns)}/{_META}.lock",
-                       what=f"vector index {ns!r}"):
-            stored_doc = self.meta(ns)
-            stored_txn = int(stored_doc.get("txn", 0))
-            if stored_txn != entry_txn:
-                raise ConcurrentMaintainerError(
-                    f"vector index {ns!r}: meta txn advanced "
-                    f"{entry_txn} -> {stored_txn} during retrain "
-                    f"(concurrent maintainer detected); re-run the "
-                    f"verb")
-            fence_doc = dict(stored_doc)
-            fence_doc["txn"] = entry_txn + 1
-            self._write_meta(ns, fence_doc)
-            self.fs.write_text_atomic(
-                f"{self._ns_dir(ns)}/{_RETRAIN_MARKER}",
-                json.dumps(target))
-        self._restore_remnants(ns)
-        return self.meta(ns)
+        # COMMIT POINT: fence + marker, then the swaps roll forward
+        return self._commit_roll(ns, target)
 
     # -------------------------------------------------------- probe
 
@@ -1868,8 +1656,8 @@ class VectorIndex:
         parquet row-group stats, applied BEFORE ranking so it prunes
         candidates and never reorders survivors.
 
-        ``expect_version`` (r14): retrain-swap consistency check, the
-        HNSW ``_probe_snapshot`` argument mirrored.  A concurrent
+        ``expect_version``: retrain-swap consistency check (the
+        argument of ``HNSWIndex._probe_snapshot``).  A concurrent
         retrain roll-forward swaps centroids FIRST (their staged
         ``_CENT_MARKER`` binds the new routing to the new version) and
         assignments LAST, so re-reading the live centroid marker
@@ -1913,7 +1701,7 @@ class VectorIndex:
             except Exception:
                 # probed dirs exist but hold no data files (swept
                 # crash window): UNABLE_TO_INFER_SCHEMA — take the
-                # full read, whose caller-side _has_buckets guard
+                # full read, whose caller-side partition-data guard
                 # already proved SOME bucket has data
                 scan = None
         if scan is None:
@@ -2001,7 +1789,8 @@ class VectorIndex:
         # centroid marker) first would serve the torn state as a
         # non-retryable error
         doc = self.meta(ns)
-        if not self._has_buckets(ns):
+        if not self.fs.dir_has_partition_data(
+                self._assignments_dir(ns), "bucket="):
             # every bucket deleted: empty index, empty result (the
             # raw read would throw UNABLE_TO_INFER_SCHEMA); the
             # entry restore above already recovered any remnants
@@ -2068,7 +1857,8 @@ class VectorIndex:
         # centroid marker) first would serve the torn state as a
         # non-retryable error
         doc = self.meta(ns)
-        if not self._has_buckets(ns):
+        if not self.fs.dir_has_partition_data(
+                self._assignments_dir(ns), "bucket="):
             # empty index (delete-everything): empty result (the raw
             # read would throw); the entry restore above already
             # recovered any remnants

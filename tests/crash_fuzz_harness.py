@@ -50,6 +50,7 @@ class CountdownFS:
         self.inner = inner
         self.fuel = fuel
         self.ops = 0
+        self.log: list[tuple] = []  # (method, args) per mutation
 
     def __getattr__(self, name):
         attr = getattr(self.inner, name)
@@ -60,6 +61,7 @@ class CountdownFS:
                         f"killed before {name} #{self.ops}: "
                         f"{args[0] if args else ''}")
                 self.ops += 1
+                self.log.append((name, args))
                 return attr(*args, **kw)
             return wrapped
         return attr
@@ -117,16 +119,31 @@ def countdown_fs_class():
     return _CountdownHadoopFS
 
 
-def dry_run(make_index, template_root: str, script) -> tuple[int, object]:
+def dry_run(make_index, template_root: str, script,
+            log: list | None = None) -> tuple[int, object]:
     """Run ``script`` fault-free against a COPY of the template index,
     counting FS mutations.  Returns (total_mutations, root_of_final_state).
+    ``log``, if given, is extended with one ``(method, args)`` entry per
+    mutation: entry ``i`` is the call a countdown of ``fuel=i`` kills.
     """
     final_root = template_root + ".final"
     shutil.copytree(template_root, final_root)
     ix = make_index(final_root)
     ix.fs = CountdownFS(ix.fs)
     script(ix)
+    if log is not None:
+        log.extend(ix.fs.log)
     return ix.fs.ops, final_root
+
+
+def first_swap_window(log: list) -> int:
+    """The fuel that kills a directory swap between its move-aside
+    (``rename(live, live.old)``) and its promote: the state with only
+    ``live.old`` on disk, which recovery must rename back."""
+    for i, (name, args) in enumerate(log):
+        if name == "rename" and str(args[1]).endswith(".old"):
+            return i + 1
+    raise AssertionError("script performs no directory swap")
 
 
 def crash_at(make_index, template_root: str, script, fuel: int,

@@ -6,13 +6,18 @@ recorded in BENCH_NOTES.md); this strided subset keeps the law under
 continuous test at ~4 boundaries per index, always including the
 first and last mutation — the windows targeted by the r10/r11 ADVICE
 fixes sit between verbs, which a stride this dense always straddles.
+The slow set runs the 4-point stride; the default run replays one
+boundary per index, a kill inside the first directory swap, so the
+swap recovery is exercised on every run.
 """
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.crash_fuzz_harness import crash_at, dry_run, recover_and_replay
+from tests.crash_fuzz_harness import (
+    crash_at, dry_run, first_swap_window, recover_and_replay,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,6 +34,18 @@ def _strides(total: int, points: int = 4) -> list[int]:
     return sorted(ks)
 
 
+#: ``points`` for the two strided tests: ``None`` replays the single
+#: swap-window boundary (default run), 4 is the slow stride.
+_POINTS = [pytest.param(None, id="swap_window"),
+           pytest.param(4, id="stride4", marks=pytest.mark.slow)]
+
+
+def _fuels(log: list, points: int | None) -> list[int]:
+    if points is None:
+        return [first_swap_window(log)]
+    return _strides(len(log), points)
+
+
 def _queries(spark, n=3):
     rows = (spark.read.parquet(f"{SF}/embeddings.parquet")
             .filter(F.col("vec_id") < n).collect())
@@ -36,8 +53,8 @@ def _queries(spark, n=3):
             for r in rows]
 
 
-@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
-def test_hnswidx_crash_fuzz_strided(spark, tmp_path):
+@pytest.mark.parametrize("points", _POINTS)
+def test_hnswidx_crash_fuzz_strided(spark, tmp_path, points):
     from rados_timestore_spark.hnsw import HNSWIndex
 
     emb = _emb(spark)
@@ -77,18 +94,19 @@ def test_hnswidx_crash_fuzz_strided(spark, tmp_path):
 
     tmpl = str(tmp_path / "tmpl")
     make(tmpl).build("e", a, shards=2, m=8, ef_construction=64)
-    total, final_root = dry_run(make, tmpl, script)
+    log: list = []
+    _, final_root = dry_run(make, tmpl, script, log=log)
     want = probe(make(final_root))
     assert want[0] == len(want[1]) > 0
-    for fuel in _strides(total):
+    for fuel in _fuels(log, points):
         work = str(tmp_path / f"k{fuel}")
         crash_at(make, tmpl, script, fuel, work)
         got = recover_and_replay(make, work, script, probe)
         assert got == want, f"fuel={fuel}: {got[0]} != {want[0]}"
 
 
-@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
-def test_vecidx_crash_fuzz_strided(spark, tmp_path):
+@pytest.mark.parametrize("points", _POINTS)
+def test_vecidx_crash_fuzz_strided(spark, tmp_path, points):
     from rados_timestore_spark.vector_index import (
         VectorIndex, VectorIndexNotBuilt,
     )
@@ -139,10 +157,11 @@ def test_vecidx_crash_fuzz_strided(spark, tmp_path):
 
     tmpl = str(tmp_path / "tmpl")
     make(tmpl).build("e", a, k=4)
-    total, final_root = dry_run(make, tmpl, script)
+    log: list = []
+    _, final_root = dry_run(make, tmpl, script, log=log)
     want = probe(make(final_root))
     assert want[0] == len(want[1]) > 0
-    for fuel in _strides(total):
+    for fuel in _fuels(log, points):
         work = str(tmp_path / f"k{fuel}")
         crash_at(make, tmpl, script, fuel, work)
         got = recover_and_replay(
@@ -196,3 +215,26 @@ def test_hnswidx_delete_everything_lifecycle(spark, tmp_path):
     ix.append_batch("e", emb, 0)
     assert ix.meta("e")["n_vectors"] == len(ids)
     assert ix.probe_candidates("e", q, k=5, ef_search=32).count() > 0
+
+
+@pytest.mark.parametrize("kind", ["ivf", "hnsw"])
+def test_verb_entry_sweeps_clockprobe_remnants(spark, tmp_path, kind):
+    # flip_lock's stale-break stamps the FS clock with a probe file in
+    # the namespace dir (fsutil.fs_now_ms); a process killed between
+    # its create and delete leaves the file there for good unless a
+    # verb entry sweeps it
+    from rados_timestore_spark.hnsw import HNSWIndex
+    from rados_timestore_spark.vector_index import VectorIndex
+
+    emb = _emb(spark, 40)
+    if kind == "ivf":
+        ix = VectorIndex(spark, str(tmp_path / kind))
+        ix.build("e", emb, k=4)
+    else:
+        ix = HNSWIndex(spark, str(tmp_path / kind))
+        ix.build("e", emb, shards=2, m=8, ef_construction=32)
+    probe = f"{ix._ns_dir('e')}/.clockprobe.1.x"
+    assert ix.fs.create_exclusive(probe)
+    ix.compact("e")
+    assert not ix.fs.exists(probe)
+    assert ix.meta("e")["n_vectors"] == 40

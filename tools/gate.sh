@@ -15,6 +15,8 @@ cd "$(dirname "$0")/.."
 # expectations (correct inside pytest), so the gate itself must fail
 # loudly instead of passing with the perf gate silently disabled.
 python tools/check_bench_fresh.py
-python -m pytest tests/ -q
+# -m "" overrides pytest.ini's default "not slow": the gate runs the
+# whole suite, including the perf gate, crash-fuzz strides and stress.
+python -m pytest tests/ -m "" -q
 python tools/check_correctness.py "${1:-/root/testdata/sf0.01}"
 python tools/check_correctness.py "${2:-/root/testdata/sf0.1}"
